@@ -20,8 +20,8 @@ from ddsketch_spark.sources.fixtures import VOCAB, generate_tokens_table
 # benchmark's own tests fast.
 SIZES = {
     "token_pass": {
-        "full": {"docs": 1200, "probes": 256},
-        "tiny": {"docs": 200, "probes": 32},
+        "full": {"tokens": 750_000, "probes": 256},
+        "tiny": {"tokens": 100_000, "probes": 32},
     },
     "many_groups": {
         "full": {"rows": 16_000, "groups": 128, "delta_rows": 1_000, "slices": 4,
@@ -70,12 +70,23 @@ def _zipf_groups(rng, n: int, groups: int) -> np.ndarray:
 
 
 def token_pass(root: str, size: str, seed: int) -> dict:
+    """The F1 tokens table cut to a fixed token count: the seed changes the
+    documents, not the amount of work (a whole table's token count swings by
+    about 5% from seed to seed)."""
     cfg = SIZES["token_pass"][size]
-    name = f"token_pass-{size}-s{seed}"
-    tokens = generate_tokens_table(
-        cfg["docs"], seed=seed, out_dir=os.path.join(root, name),
-        chunk_docs=-(-cfg["docs"] // ROW_GROUPS),
-    )
+
+    def build(d):
+        # ~650 tokens a document: 60% more documents than the cut needs
+        gen = generate_tokens_table(-(-cfg["tokens"] // 400), seed=seed, out_dir=os.path.join(d, "gen"))
+        t = pq.read_table(gen)
+        shutil.rmtree(gen)
+        total = np.cumsum(t.column("n_tok").to_numpy())
+        if total[-1] < cfg["tokens"]:
+            raise RuntimeError(f"seed {seed} gave {total[-1]} tokens, fewer than {cfg['tokens']}")
+        keep = int(np.searchsorted(total, cfg["tokens"], side="right"))
+        _write(t.slice(0, keep), os.path.join(d, "part-0.parquet"))
+
+    tokens = _cached(root, f"token_pass-{size}-s{seed}", f"{cfg} v2", build)
     rng = np.random.default_rng([seed, 1])
     # half the probes fall in the vocabulary, half outside it
     probes = rng.integers(0, 2 * VOCAB, size=cfg["probes"]).astype(np.int64)

@@ -78,11 +78,12 @@ def _env() -> None:
 def start_spark(cores: int):
     from pyspark.sql import SparkSession
 
-    # serial GC and two JIT threads: on a few shared vCPUs the JVM's own
-    # background threads otherwise compete with the task threads and make
-    # job times and memory swing from run to run
+    # serial GC: on a few shared vCPUs parallel GC threads compete with the
+    # task threads and make job times and memory swing from run to run. The
+    # JIT keeps its default number of compiler threads: with fewer, its
+    # compiling drags on into the timed jobs and their CPU swings with it.
     java_opts = (f"-Dderby.system.home={os.path.join(WORK, 'derby')} "
-                 "-XX:+UseSerialGC -XX:CICompilerCount=2")
+                 "-XX:+UseSerialGC")
     spark = (
         SparkSession.builder.master(f"local[{cores}]").appName("sketchbench")
         .config("spark.driver.memory", "1g")
@@ -92,6 +93,10 @@ def start_spark(cores: int):
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
         .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # one job generates ~85 classes; at the default 100 entries, whether
+        # a repeated job recompiles a third of them depends on eviction, so
+        # some runs pay that compile and JIT CPU in every job and others not
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
