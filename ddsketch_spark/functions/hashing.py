@@ -15,9 +15,11 @@ three 31/31/2-bit limbs of the key's 64-bit two's-complement pattern:
 
 with a_i, a'_i, a''_i < 2^30 so each product is < 2^61 and each running
 sum (reduced mod P between terms) stays < 2^62: all intermediates fit in a
-signed int64, so the same expression evaluates identically as a Spark
-Column (codegen'd long arithmetic), a numpy int64 ufunc chain, and a
-DuckDB BIGINT expression -- no wraparound semantics or HUGEINT needed.
+signed int64, so the same expression evaluates identically as Spark SQL
+(codegen'd long arithmetic), a numpy int64 ufunc chain, and a DuckDB
+BIGINT expression -- no wraparound semantics or HUGEINT needed.  One text
+emitter serves both SQL engines; they differ only in how shifts and the
+modulo are spelled (see ``Dialect``).
 The (a_i, b_i) constants come from a fixed-seed splitmix64 and
 (a'_i, a''_i) are derived deterministically from (a_i, b_i), so every
 engine sees the same family.
@@ -34,10 +36,10 @@ rank (rho), standard practice for 61-bit universal hashes.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, NamedTuple, Sequence
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MERSENNE61 = (1 << 61) - 1
@@ -71,8 +73,31 @@ def hash_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
 
 
 # ---------------------------------------------------------------------------
-# the three engines
+# the three engines: numpy, and SQL text for Spark and DuckDB
 # ---------------------------------------------------------------------------
+
+class Dialect(NamedTuple):
+    """How one SQL engine spells the operations the hash needs besides
+    + * & and CAST.  Spark 4.1 fails to parse ``>>`` inside ``array(...)``
+    and DuckDB has no shiftright/shiftleft/pmod; every operand here is
+    non-negative, so ``%`` and ``pmod`` agree."""
+
+    shr: Callable[[str, int], str]
+    shl: Callable[[str, int], str]
+    mod: Callable[[str, int], str]
+
+
+DUCKDB = Dialect(
+    shr=lambda x, n: f"({x} >> {n})",
+    shl=lambda x, n: f"({x} << {n})",
+    mod=lambda x, n: f"({x} % {n})",
+)
+SPARK = Dialect(
+    shr=lambda x, n: f"shiftright({x}, {n})",
+    shl=lambda x, n: f"shiftleft({x}, {n})",
+    mod=lambda x, n: f"pmod({x}, {n})",
+)
+
 
 def _limb_params(a: int, b: int) -> tuple[int, int]:
     """Deterministic (a', a'') multipliers for the mid/hi limbs, derived
@@ -84,23 +109,8 @@ def _limb_params(a: int, b: int) -> tuple[int, int]:
     return a2, a3
 
 
-def hash_col(x: Column, a: int, b: int) -> Column:
-    """Spark Column: multilinear limb hash mod P, all long arithmetic
-    inside whole-stage codegen (no UDF). Arithmetic >> then & with a
-    positive mask yields the nonnegative limbs on any int64 input."""
-    a2, a3 = _limb_params(a, b)
-    xl = x.cast("long")
-    P = F.lit(MERSENNE61)
-    lo = xl.bitwiseAND(F.lit(FOLD31))
-    mid = F.shiftright(xl, 31).bitwiseAND(F.lit(FOLD31))
-    hi = F.shiftright(xl, 62).bitwiseAND(F.lit(3))
-    t = F.pmod(F.lit(a) * lo + F.lit(b), P)
-    t = F.pmod(t + F.lit(a2) * mid, P)
-    return F.pmod(t + F.lit(a3) * hi, P)
-
-
 def hash_np(x: np.ndarray, a: int, b: int) -> np.ndarray:
-    """numpy int64: identical to hash_col / hash_sql."""
+    """numpy int64: identical to hash_sql in either dialect."""
     a2, a3 = _limb_params(a, b)
     xl = np.asarray(x).astype(np.int64)
     lo = xl & np.int64(FOLD31)
@@ -111,17 +121,18 @@ def hash_np(x: np.ndarray, a: int, b: int) -> np.ndarray:
     return np.mod(t + a3 * hi, MERSENNE61)
 
 
-def hash_sql(x: str, a: int, b: int) -> str:
-    """DuckDB BIGINT expression string; >> on BIGINT is arithmetic shift,
-    matching Java/numpy, so the limbs agree bit-for-bit on any int64."""
+def hash_sql(x: str, a: int, b: int, d: Dialect = DUCKDB) -> str:
+    """BIGINT expression text for the limb hash of ``x``.  Arithmetic
+    shift then & with a positive mask yields the non-negative limbs on any
+    int64, identically in Java, numpy and DuckDB."""
     a2, a3 = _limb_params(a, b)
     xe = f"CAST(({x}) AS BIGINT)"
     lo = f"({xe} & {FOLD31})"
-    mid = f"(({xe} >> 31) & {FOLD31})"
-    hi = f"(({xe} >> 62) & 3)"
-    t1 = f"(({a}::BIGINT * {lo} + {b}) % {MERSENNE61})"
-    t2 = f"(({t1} + {a2}::BIGINT * {mid}) % {MERSENNE61})"
-    return f"(({t2} + {a3}::BIGINT * {hi}) % {MERSENNE61})"
+    mid = f"({d.shr(xe, 31)} & {FOLD31})"
+    hi = f"({d.shr(xe, 62)} & 3)"
+    t = d.mod(f"(({a} * {lo}) + {b})", MERSENNE61)
+    t = d.mod(f"({t} + ({a2} * {mid}))", MERSENNE61)
+    return d.mod(f"({t} + ({a3} * {hi}))", MERSENNE61)
 
 
 # ---------------------------------------------------------------------------
@@ -149,28 +160,17 @@ def mix_np(h: np.ndarray) -> np.ndarray:
     return (2 * h1 * h1 % MERSENNE61 + cross + h0 * h0 % MERSENNE61) % MERSENNE61
 
 
-def mix_col(h: Column) -> Column:
-    P = F.lit(MERSENNE61)
-    h1 = F.shiftright(h, 31)
-    h0 = h.bitwiseAND(F.lit((1 << 31) - 1))
-    t = F.pmod(F.lit(2) * F.pmod(h1 * h0, P), P)
-    cross = F.pmod(
-        F.shiftright(t, 30)
-        + F.shiftleft(t.bitwiseAND(F.lit((1 << 30) - 1)), 31),
-        P,
-    )
-    return F.pmod(
-        F.pmod(F.lit(2) * h1 * h1, P) + cross + F.pmod(h0 * h0, P), P
-    )
-
-
-def mix_sql(h: str) -> str:
+def mix_sql(h: str, d: Dialect = DUCKDB) -> str:
+    """Expression text mirroring mix_np.  It reads ``h`` eight times, so
+    a Spark plan passes a column name (with_hashes); inlining the limb
+    hash, as mixed_hash_sql does for one-off oracle SQL, repeats it 8x."""
     P = MERSENNE61
-    return (
-        f"((2*((({h}) >> 31)*(({h}) >> 31)) % {P}"
-        f" + ((((2*(((({h}) >> 31)*(({h}) & {(1 << 31) - 1})) % {P})) % {P}) >> 30)"
-        f"    + ((((2*(((({h}) >> 31)*(({h}) & {(1 << 31) - 1})) % {P})) % {P}) & {(1 << 30) - 1}) << 31)) % {P}"
-        f" + ((({h}) & {(1 << 31) - 1})*(({h}) & {(1 << 31) - 1})) % {P}) % {P})"
+    h1 = d.shr(f"({h})", 31)
+    h0 = f"(({h}) & {FOLD31})"
+    t = d.mod(f"(2 * {d.mod(f'({h1} * {h0})', P)})", P)
+    cross = d.mod(f"({d.shr(t, 30)} + {d.shl(f'({t} & {(1 << 30) - 1})', 31)})", P)
+    return d.mod(
+        f"({d.mod(f'((2 * {h1}) * {h1})', P)} + {cross} + {d.mod(f'({h0} * {h0})', P)})", P
     )
 
 
@@ -178,12 +178,8 @@ def mixed_hash_np(x: np.ndarray, a: int, b: int) -> np.ndarray:
     return mix_np(hash_np(x, a, b))
 
 
-def mixed_hash_col(x: Column, a: int, b: int) -> Column:
-    return mix_col(hash_col(x, a, b))
-
-
-def mixed_hash_sql(x: str, a: int, b: int) -> str:
-    return mix_sql(hash_sql(x, a, b))
+def mixed_hash_sql(x: str, a: int, b: int, d: Dialect = DUCKDB) -> str:
+    return mix_sql(hash_sql(x, a, b, d), d)
 
 
 # ---------------------------------------------------------------------------
@@ -195,8 +191,8 @@ def bitlen_np(x: np.ndarray) -> np.ndarray:
 
     frexp on float64 can be off by one near powers of two for inputs
     >= 2^53, so the estimate is corrected with exact integer compares
-    against 2^(e-1) and 2^e (mirrors bitlen_col's correction so the numpy
-    core and the Spark/SQL engines agree on HLL rho for every p)."""
+    against 2^(e-1) and 2^e; the numpy core and the SQL engines then agree
+    on HLL rho for every p."""
     xl = np.asarray(x).astype(np.int64)
     _, e = np.frexp(xl.astype(np.float64))
     e = np.clip(e.astype(np.int64), 1, 62)
@@ -207,18 +203,42 @@ def bitlen_np(x: np.ndarray) -> np.ndarray:
 
 
 def bitlen_sql(x: str) -> str:
-    """DuckDB: length(bin(x)) gives the MSB position for x > 0."""
+    """Spark and DuckDB alike: length(bin(x)) is the MSB position of an
+    x > 0 (exact, no float step)."""
     return f"(CASE WHEN ({x}) = 0 THEN 0 ELSE length(bin({x})) END)"
 
 
-def bitlen_col(x: Column) -> Column:
-    """Spark Column bit length via floor(log2) on values < 2^53.
+# ---------------------------------------------------------------------------
+# staged Spark projections
+# ---------------------------------------------------------------------------
 
-    Exactness: log2 of an int64 < 2^53 is computed on an exactly-
-    representable double; floor(log2(x)) can only err when x is within a few
-    ulps of a power of two, so we correct with an exact integer compare
-    against pow(2, e)."""
-    e = F.floor(F.log2(x.cast("double"))).cast("long")
-    p = F.pow(F.lit(2.0), e.cast("double")).cast("long")
-    e_fixed = F.when(x < p, e - 1).when(x >= p * 2, e + 1).otherwise(e)
-    return F.when(x == 0, F.lit(0).cast("long")).otherwise(e_fixed + 1)
+def sql_ident(name: str) -> str:
+    """Backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def with_hashes(
+    df: DataFrame,
+    value: Column | str,
+    params: Sequence[tuple[int, int]],
+    mix: bool = True,
+) -> DataFrame:
+    """``df`` plus one hash of ``value`` per (a, b) in ``params``: the mixed
+    hash ``__m{j}``, or only the limb hash ``__h{j}`` when ``mix`` is off.
+
+    Staged projections, one py4j call each: value -> ``__x``, limb hashes
+    -> ``__h{j}``, mixes -> ``__m{j}``.  No stage
+    inlines another, and Catalyst keeps the split (CollapseProject does not
+    inline a non-cheap alias its consumer reads several times; the mix reads
+    ``__h{j}`` eight times), so each stage stays a small codegen'd
+    expression.  Callers derive registers, bits or cells from these columns
+    in one more ``selectExpr``."""
+    x = df.withColumn("__x", value if isinstance(value, Column) else F.col(value))
+    h = x.selectExpr(
+        "*", *[f"{hash_sql('__x', a, b, SPARK)} AS __h{j}" for j, (a, b) in enumerate(params)]
+    )
+    if not mix:
+        return h
+    return h.selectExpr(
+        "*", *[f"{mix_sql(f'__h{j}', SPARK)} AS __m{j}" for j in range(len(params))]
+    )

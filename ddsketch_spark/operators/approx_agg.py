@@ -1,10 +1,18 @@
 """Distributed HLL / count-min / Bloom aggregation: the JVM-native path.
 
-Same architecture as the DDSketch path (operators.ddsketch_agg): a codegen'd
-Catalyst expression maps every value to its register/cell/bit JVM-side, a
+Same architecture as the DDSketch path (operators.ddsketch_agg): codegen'd
+Catalyst projections map every value to its register/cell/bit JVM-side, a
 ``groupBy(...).agg(...)`` does the data-sized reduction with automatic
 map-side partials, and only the tiny per-group aggregated state (<= m
-registers / d*w cells / k*n bits) ever reaches Python or a shuffle.
+registers / d*w cells / k*n bits) ever reaches a shuffle.
+
+The hashes are staged Spark-SQL projections built from text
+(functions.hashing.with_hashes): limb hash -> ``__h``, mix -> ``__m``,
+then registers, cells or bits, one ``selectExpr`` each, so building a plan
+costs a few py4j calls, not hundreds of Column calls.  HLL never reaches
+Python: registers, v_zero, checksum, the harmonic sum and the estimate
+are all Catalyst aggregates and projections.  CMS and Bloom state rows
+(``cms_sketch``, ``bloom_sketch``) are still packed by pandas finalizers.
 
 At 100 TB this is the property that matters: the shuffle after the partial
 aggregate carries at most (#groups x state-size) rows regardless of input
@@ -23,16 +31,14 @@ from pyspark.sql import functions as F
 
 from ddsketch_spark.core import bloom as bloom_core
 from ddsketch_spark.core import cms as cms_core
-from ddsketch_spark.core import hll as hll_core
 from ddsketch_spark.core.bloom import BloomConfig
 from ddsketch_spark.core.cms import CMSConfig
 from ddsketch_spark.core.hll import HLLConfig
 from ddsketch_spark.functions.hashing import (
     HASH_BITS,
-    bitlen_col,
-    hash_col,
-    mix_col,
-    mixed_hash_col,
+    bitlen_sql,
+    sql_ident,
+    with_hashes,
 )
 
 _GLOBAL = "__global_group"
@@ -57,14 +63,20 @@ def _grouped(df: DataFrame, group_cols: Sequence[str]):
 # HyperLogLog
 # ---------------------------------------------------------------------------
 
-def hll_idx_rho(value: Column | str, cfg: HLLConfig) -> tuple[Column, Column]:
-    """JVM columns mirroring core.hll.idx_rho bit-for-bit."""
-    a, b = cfg.hash_ab
-    h = mixed_hash_col(_colref(value), a, b)
-    idx = F.pmod(h, F.lit(cfg.m))
-    rest = F.shiftright(h, cfg.p)  # h >= 0: arithmetic shift == floor div
-    rho = F.lit(HASH_BITS - cfg.p) - bitlen_col(rest) + F.lit(1)
-    return idx, rho
+def hll_idx_rho(
+    df: DataFrame, value: Column | str, cfg: HLLConfig, keep: Sequence[str] = ()
+) -> DataFrame:
+    """(keep..., idx, rho) per non-null value, mirroring core.hll.idx_rho
+    bit for bit: the mixed hash ``__m0`` is one staged projection, idx/rho
+    the next.  The hash of a non-null value is never null, so the filter
+    tests the value, not the (pushed-down, re-inlined) hash."""
+    hashed = with_hashes(df, value, [cfg.hash_ab]).where("__x IS NOT NULL")
+    rest = f"shiftright(__m0, {cfg.p})"  # __m0 >= 0: arithmetic shift == floor div
+    return hashed.selectExpr(
+        *map(sql_ident, keep),
+        f"pmod(__m0, {cfg.m}) AS idx",
+        f"CAST({HASH_BITS - cfg.p + 1} - {bitlen_sql(rest)} AS BIGINT) AS rho",
+    )
 
 
 def hll_registers(
@@ -76,10 +88,44 @@ def hll_registers(
     """(group_cols..., idx, rho) non-zero register maxima -- the data-sized
     stage; shuffles at most (#groups x 2^p) rows."""
     cfg = cfg or HLLConfig()
-    idx, rho = hll_idx_rho(value, cfg)
-    keyed = df.select(*group_cols, idx.alias("idx"), rho.alias("rho"))
-    keyed = keyed.where(F.col("idx").isNotNull())
+    keyed = hll_idx_rho(df, value, cfg, group_cols)
     return keyed.groupBy(*group_cols, "idx").agg(F.max("rho").alias("rho"))
+
+
+def _nullable(df: DataFrame) -> DataFrame:
+    """Every column nullable -- the schema these results had when pandas
+    UDFs built them, so stored results keep their exact bytes.
+    ``if(true, c, NULL)`` is ``c`` typed nullable; the optimizer folds it."""
+    return df.selectExpr(*[f"if(true, {c}, NULL) AS {c}" for c in map(sql_ident, df.columns)])
+
+
+def _hll_finish(regs: DataFrame, cfg: HLLConfig, keys: Sequence[str]) -> DataFrame:
+    """(keys..., estimate, v_zero, checksum) from register rows, in Catalyst.
+
+    Mirrors core.hll.estimate term for term: the harmonic sum adds exact
+    powers of two (exact in float64 in any order), alpha*m*m is the same
+    Python double, and m/v and the products round as in numpy.  One
+    difference remains: Spark's ln is Java's StrictMath.log, which differs
+    from libm's log by one ulp on about 7.5% of the (p, v_zero) pairs the
+    linear-counting branch can reach, so there the estimate can differ
+    from core.hll.estimate in the last bit (v_zero and checksum are
+    exact).  No keys means one global row, empty input included
+    (v_zero = m, estimate 0.0, as core.hll on an empty sketch)."""
+    m = cfg.m
+    sums = regs.groupBy(*keys).agg(
+        F.expr("count(1) AS __set"),
+        F.expr("sum(idx * rho) AS __cs"),
+        F.expr("sum(power(2D, -rho)) AS __hs"),
+    )
+    v = f"({m} - __set)"
+    e = f"({cfg.alpha_m * m * m!r}D / (coalesce(__hs, 0D) + {v}))"
+    return _nullable(sums.selectExpr(
+        *map(sql_ident, keys),
+        f"CASE WHEN {e} <= {2.5 * m!r}D AND {v} > 0"
+        f" THEN {m} * ln(CAST({m} AS DOUBLE) / {v}) ELSE {e} END AS estimate",
+        f"{v} AS v_zero",
+        "coalesce(__cs, 0L) AS checksum",
+    ))
 
 
 def hll_sketch(
@@ -88,25 +134,20 @@ def hll_sketch(
     cfg: HLLConfig | None = None,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Per-group canonical sparse HLL state rows."""
+    """Per-group canonical sparse HLL state rows (core.hll.to_dict): the
+    registers sorted by idx, collected in Catalyst."""
     cfg = cfg or HLLConfig()
     regs = hll_registers(df, value, cfg, group_cols)
-    grouped, keys = _grouped(regs, group_cols)
-    out_schema = (
-        _group_schema_prefix(regs, group_cols)
-        + "p int, seed long, idxs array<long>, rhos array<long>"
+    states = regs.groupBy(*group_cols).agg(
+        F.expr("sort_array(collect_list(struct(idx, rho))) AS __r")
     )
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = hll_core.add_idx_rho(
-            hll_core.empty(cfg), pdf["idx"].to_numpy(), pdf["rho"].to_numpy()
-        )
-        row = hll_core.to_dict(sk)
-        for g in group_cols:
-            row[g] = pdf[g].iloc[0]
-        return pd.DataFrame([row])
-
-    return grouped.applyInPandas(finalize, schema=out_schema)
+    return _nullable(states.selectExpr(
+        *map(sql_ident, group_cols),
+        f"{cfg.p} AS p",
+        f"CAST({cfg.seed} AS BIGINT) AS seed",
+        "__r.idx AS idxs",
+        "__r.rho AS rhos",
+    ))
 
 
 def hll_estimate(
@@ -121,27 +162,7 @@ def hll_estimate(
     integers -- the strong oracle signals; estimate is deterministic float
     (see core.hll.harmonic_sum exactness note)."""
     cfg = cfg or HLLConfig()
-    regs = hll_registers(df, value, cfg, group_cols)
-    grouped, keys = _grouped(regs, group_cols)
-    out_schema = (
-        _group_schema_prefix(regs, group_cols)
-        + "estimate double, v_zero long, checksum long"
-    )
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = hll_core.add_idx_rho(
-            hll_core.empty(cfg), pdf["idx"].to_numpy(), pdf["rho"].to_numpy()
-        )
-        row = {
-            "estimate": hll_core.estimate(sk),
-            "v_zero": cfg.m - len(sk.idxs),
-            "checksum": hll_core.register_checksum(sk),
-        }
-        for g in group_cols:
-            row[g] = pdf[g].iloc[0]
-        return pd.DataFrame([row])
-
-    return grouped.applyInPandas(finalize, schema=out_schema)
+    return _hll_finish(hll_registers(df, value, cfg, group_cols), cfg, group_cols)
 
 
 def hll_estimate_rollup(
@@ -157,63 +178,40 @@ def hll_estimate_rollup(
     the per-group registers, so ``rollup(idx, group)`` computes both
     grouping sets in a single shuffle over at most (#groups + 1) x 2^p
     register rows -- no second scan, no cached intermediate.  The global
-    row carries ``all_label`` in the group column (grouping_id
-    disambiguates, so a genuine NULL group value cannot collide)."""
+    row carries ``all_label`` in the group column.  The grouping id stays
+    in the finish's key, so neither a NULL group nor a group whose value
+    equals ``all_label`` merges into the global row (the latter keeps its
+    own row, under the same label)."""
     cfg = cfg or HLLConfig()
-    idx, rho = hll_idx_rho(value, cfg)
-    keyed = df.select(F.col(group_col), idx.alias("idx"), rho.alias("rho"))
-    keyed = keyed.where(F.col("idx").isNotNull())
+    keyed = hll_idx_rho(df, value, cfg, [group_col])
     # rollup(idx, group) -> grouping sets {(idx, group), (idx,), ()};
     # gid 0 = per-group registers, gid 1 = global registers, gid 3 = drop
     regs = (
         keyed.rollup("idx", group_col)
         .agg(F.max("rho").alias("rho"), F.grouping_id().alias("__gid"))
         .where(F.col("__gid") < 3)
-        .select(
-            F.when(F.col("__gid") == 1, F.lit(all_label))
-            .otherwise(F.col(group_col))
-            .alias(group_col),
-            "idx",
-            "rho",
-        )
     )
+    out = _hll_finish(regs, cfg, ["__gid", group_col])
     # the all_label literal makes the group column string-typed
-    out_schema = f"{group_col} string, estimate double, v_zero long, checksum long"
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = hll_core.add_idx_rho(
-            hll_core.empty(cfg), pdf["idx"].to_numpy(), pdf["rho"].to_numpy()
-        )
-        return pd.DataFrame(
-            [
-                {
-                    group_col: pdf[group_col].iloc[0],
-                    "estimate": hll_core.estimate(sk),
-                    "v_zero": cfg.m - len(sk.idxs),
-                    "checksum": hll_core.register_checksum(sk),
-                }
-            ]
-        )
-
-    return regs.groupBy(group_col).applyInPandas(finalize, schema=out_schema)
+    label = F.when(F.col("__gid") == 1, F.lit(all_label)).otherwise(F.col(group_col))
+    return out.select(label.alias(group_col), "estimate", "v_zero", "checksum")
 
 
 # ---------------------------------------------------------------------------
 # Count-min
 # ---------------------------------------------------------------------------
 
-def cms_cell_cols(value: Column | str, cfg: CMSConfig) -> Column:
-    """array<struct<row,col>> of the d cells for a value (JVM-side)."""
-    v = _colref(value)
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("row"),
-                F.pmod(hash_col(v, a, b), F.lit(cfg.width)).alias("col"),
-            )
-            for i, (a, b) in enumerate(cfg.hash_abs)
-        ]
+def cms_cells(
+    df: DataFrame, value: Column | str, cfg: CMSConfig, keep: Sequence[str] = ()
+) -> DataFrame:
+    """(keep..., row, col) the d cells of each value, one row per cell:
+    the d limb hashes are one staged projection, the cells the next."""
+    hashed = with_hashes(df, value, cfg.hash_abs, mix=False)
+    cells = ", ".join(
+        f"named_struct('row', {i}, 'col', pmod(__h{i}, {cfg.width}))"
+        for i in range(len(cfg.hash_abs))
     )
+    return hashed.selectExpr(*map(sql_ident, keep), f"inline(array({cells}))")
 
 
 def cms_counters(
@@ -228,13 +226,11 @@ def cms_counters(
     shuffle carries at most (#groups x d x width) rows."""
     cfg = cfg or CMSConfig()
     w = F.lit(1).cast("long") if weight is None else _colref(weight).cast("long")
-    keyed = df.select(
-        *group_cols, F.explode(cms_cell_cols(value, cfg)).alias("cell"), w.alias("w")
-    )
+    keyed = cms_cells(df.withColumn("__w", w), value, cfg, [*group_cols, "__w"])
     return (
-        keyed.where(F.col("cell.col").isNotNull())
-        .groupBy(*group_cols, F.col("cell.row").alias("row"), F.col("cell.col").alias("col"))
-        .agg(F.sum("w").alias("cnt"))
+        keyed.where("col IS NOT NULL")
+        .groupBy(*group_cols, "row", "col")
+        .agg(F.sum("__w").alias("cnt"))
     )
 
 
@@ -278,10 +274,7 @@ def cms_point_query(
     d cells and broadcast-joined against the (small) counter table."""
     cfg = cfg or CMSConfig()
     cnts = cms_counters(df, value, cfg)
-    pr = probes.select(
-        F.col(probe_col).alias("probe"),
-        F.explode(cms_cell_cols(F.col(probe_col), cfg)).alias("cell"),
-    ).select("probe", F.col("cell.row").alias("row"), F.col("cell.col").alias("col"))
+    pr = cms_cells(probes.select(F.col(probe_col).alias("probe")), "probe", cfg, ["probe"])
     joined = pr.join(F.broadcast(cnts), ["row", "col"], "left").select(
         "probe", F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt")
     )
@@ -303,7 +296,9 @@ def local_topk_pandas(batches, k_local: int, prune_factor: int) -> np.ndarray:
     every key stored_count >= true_count - floor at all times.
 
     Emission keeps every key with stored + floor >= (k_local-th largest
-    stored count), bounded by cap keys.  Guarantee, independent of batch
+    stored count).  The table is pruned only once it exceeds 2*cap keys,
+    so emission is bounded by 2*cap = 2 * prune_factor * k_local keys.
+    Guarantee, independent of batch
     ordering: ANY key whose true within-partition count is at least
     kth_stored + floor -- in particular any key above
     N_partition/(cap+1) + kth_stored -- is emitted.  With no pruning
@@ -335,8 +330,9 @@ def local_topk_candidates(
     """(item) heavy-hitter candidates: per-partition top items by local
     count, via one Arrow-batched mapInPandas pass -- the 100 TB candidate
     source (VERDICT r3 item 4).  No shuffle of the value column ever
-    happens: each partition emits at most ``prune_factor * k_local`` rows,
-    and the only aggregation downstream is a distinct over the union.
+    happens: each partition emits at most ``2 * prune_factor * k_local``
+    rows (the summary prunes only past twice its capacity), and the only
+    aggregation downstream is a distinct over the union.
 
     Memory per task is bounded by the prune capacity, and counting is a
     Misra-Gries summary (see :func:`local_topk_pandas`), giving a real
@@ -409,20 +405,17 @@ def cms_heavy_hitters(
         candidates = df.select(v.alias("item")).distinct()
     else:
         raise ValueError(f"unknown candidate_source: {candidate_source!r}")
-    pr = candidates.select(
-        F.col("item").alias("probe"),
-        F.explode(cms_cell_cols(F.col("item"), cfg)).alias("cell"),
-    ).select("probe", F.col("cell.row").alias("row"), F.col("cell.col").alias("col"))
+    pr = cms_cells(candidates, "item", cfg, ["item"])
     est = (
         pr.join(F.broadcast(cnts), ["row", "col"], "left")
-        .select("probe", F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"))
-        .groupBy("probe")
+        .select("item", F.coalesce(F.col("cnt"), F.lit(0)).alias("cnt"))
+        .groupBy("item")
         .agg(F.min("cnt").alias("est"))
     )
     return (
         est.crossJoin(F.broadcast(n))
         .where(F.col("est") >= F.lit(phi) * F.col("n"))
-        .select(F.col("probe").alias("item"), "est")
+        .select("item", "est")
     )
 
 
@@ -430,50 +423,21 @@ def cms_heavy_hitters(
 # Bloom
 # ---------------------------------------------------------------------------
 
-def bloom_bit_col(value: Column | str, cfg: BloomConfig) -> Column:
-    """array<long> of the k bit positions for a value (JVM-side).
-
-    Prefer ``_bloom_bit_rows`` for DataFrame-scale inputs: k mixed hashes
-    inlined into ONE projection exceed the whole-stage-codegen method
-    limit, and the interpreted fallback is ~20x slower (measured at sf0.1:
-    12.6s vs 0.6s for the 600k-row build). This single-Column form is fine
-    for small probe sets and for expression-level composition."""
-    v = _colref(value)
-    return F.array(
-        *[F.pmod(mixed_hash_col(v, a, b), F.lit(cfg.m_bits)) for (a, b) in cfg.hash_abs]
-    )
-
-
 def _bloom_bit_rows(
     df: DataFrame,
     value: Column | str,
     cfg: BloomConfig,
     keep_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """(keep_cols..., bit) one row per (input row, hash function).
-
-    Two projections, not one: the k linear hashes first (small codegen'd
-    exprs), then mix+pmod over those ATTRIBUTES. Catalyst keeps the split
-    (CollapseProject refuses to inline non-cheap aliases referenced many
-    times -- mix references its argument 8x), so each stage stays inside
-    whole-stage codegen."""
-    v = _colref(value)
-    k = len(cfg.hash_abs)
-    lin = df.select(
-        *keep_cols,
-        *[hash_col(v, a, b).alias(f"__bl{j}") for j, (a, b) in enumerate(cfg.hash_abs)],
-    )
-    return lin.select(
-        *keep_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(mix_col(F.col(f"__bl{j}")), F.lit(cfg.m_bits))
-                    for j in range(k)
-                ]
-            )
-        ).alias("bit"),
-    )
+    """(keep_cols..., bit) one row per (input row, hash function): the k
+    mixed hashes are staged projections (functions.hashing.with_hashes),
+    the bits the next one.  Inlining all k mixes into one projection
+    would exceed the whole-stage-codegen method limit, and the interpreted
+    fallback is ~20x slower (measured at sf0.1: 12.6s vs 0.6s for the
+    600k-row build)."""
+    hashed = with_hashes(df, value, cfg.hash_abs)
+    bits = ", ".join(f"pmod(__m{j}, {cfg.m_bits})" for j in range(len(cfg.hash_abs)))
+    return hashed.selectExpr(*map(sql_ident, keep_cols), f"explode(array({bits})) AS bit")
 
 
 def bloom_bits(

@@ -5,6 +5,11 @@ hashing, min-wise aggregation, banding, and pair verification all run
 JVM-side; the only shuffles are key-grouped aggregations and the
 candidate-pair self-join (which is bucket-local by construction).
 
+The MinHash/SimHash hashes and the LSH band keys are Spark-SQL text:
+staged projections (functions.hashing.with_hashes: limb hash -> ``__h``,
+mix -> ``__m``) and one ``selectExpr`` for the band buckets, so each
+stage is one py4j call and no stage inlines another.
+
 Shingle coding: an n-gram of token ids codes to the exact integer
 sum(t_i * (V+1)^(n-1-i)) over vocabulary size V -- collision-free, and
 reproducible in DuckDB SQL for value-level oracles (plans.dedup_suite).
@@ -28,10 +33,9 @@ from pyspark.sql import functions as F
 
 from ddsketch_spark.functions.hashing import (
     FOLD31,
-    hash_col,
     hash_params,
-    mix_col,
-    mixed_hash_col,
+    sql_ident,
+    with_hashes,
 )
 from ddsketch_spark.operators.text_ops import FP_BASE, FP_MOD, fingerprint_col
 
@@ -136,38 +140,25 @@ def minhash_signatures(
     min() aggregates over the mixed 61-bit hash (min over a linear-only
     hash would be biased -- see functions.hashing).
 
-    The k hashes are evaluated in TWO pre-aggregation projections (linear
-    limb hashes first, then the h^2-mod-P mix over those attributes), the
-    same split approx_agg._bloom_bit_rows uses: expressions inlined into
-    the aggregate's update path fall out of whole-stage codegen past the
-    method limit (~20x slower, measured), whereas Catalyst keeps this split
-    (CollapseProject refuses to inline non-cheap aliases referenced many
-    times) so both stages stay codegen'd and the min() aggregates only see
-    plain columns. The mirror SQL oracle (plans.dedup_suite) already
-    computes lin -> MIN(mix(h)) in the same shape, so values are unchanged."""
-    params = hash_params(num_hashes, seed)
-    lin = shingles.select(
-        id_col,
-        *[
-            hash_col(F.col("shingle"), a, b).alias(f"__l{j}")
-            for j, (a, b) in enumerate(params)
-        ],
-    )
-    mixed = lin.select(
-        id_col,
-        *[mix_col(F.col(f"__l{j}")).alias(f"__m{j}") for j in range(num_hashes)],
-    )
-    return mixed.groupBy(id_col).agg(
-        *[F.min(f"__m{j}").alias(f"m{j}") for j in range(num_hashes)]
+    The k hashes are staged pre-aggregation projections
+    (functions.hashing.with_hashes: limb hashes, then the h^2-mod-P mix
+    over those attributes): expressions inlined into the aggregate's
+    update path fall out of whole-stage codegen past the method limit
+    (~20x slower, measured), so the min() aggregates only see plain
+    columns. The mirror SQL oracle (plans.dedup_suite) computes
+    lin -> MIN(mix(h)) in the same shape."""
+    hashed = with_hashes(shingles, "shingle", hash_params(num_hashes, seed))
+    return hashed.groupBy(id_col).agg(
+        *[F.expr(f"min(__m{j}) AS m{j}") for j in range(num_hashes)]
     )
 
 
-def band_bucket_expr(cols: Sequence[str]) -> Column:
-    """Fold a band's minhashes into one bucket key: int64-safe rolling hash
-    over the 31-bit folds of each signature."""
-    acc = F.lit(0).cast("long")
+def band_bucket_sql(cols: Sequence[str]) -> str:
+    """Fold a band's minhashes into one bucket key (Spark SQL text):
+    int64-safe rolling hash over the 31-bit folds of each signature."""
+    acc = "CAST(0 AS BIGINT)"
     for c in cols:
-        acc = F.pmod(acc * F.lit(FP_BASE) + F.pmod(F.col(c), F.lit(FOLD31)), F.lit(FP_MOD))
+        acc = f"pmod(({acc} * {FP_BASE}) + pmod({sql_ident(c)}, {FOLD31}), {FP_MOD})"
     return acc
 
 
@@ -183,18 +174,12 @@ def lsh_buckets(
     One explode projection (NOT a union of per-band selects, which would
     re-run the signature aggregation once per band)."""
     r = num_hashes // bands
-    bb = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                band_bucket_expr([f"m{band * r + i}" for i in range(r)]).alias("bucket"),
-            )
-            for band in range(bands)
-        ]
+    bb = ", ".join(
+        f"named_struct('band', {band}, 'bucket', "
+        f"{band_bucket_sql([f'm{band * r + i}' for i in range(r)])})"
+        for band in range(bands)
     )
-    return signatures.select(F.col(id_col), F.explode(bb).alias("__bb")).select(
-        id_col, F.col("__bb.band").alias("band"), F.col("__bb.bucket").alias("bucket")
-    )
+    return signatures.selectExpr(sql_ident(id_col), f"inline(array({bb}))")
 
 
 DEFAULT_MAX_BUCKET = 10_000
@@ -522,17 +507,18 @@ def simhash(
     a, b = hash_params(1, seed)[0]
     tok = tokens_df.select(F.col(id_col), F.explode(t).alias("token"))
     counted = tok.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("cnt"))
-    h = mixed_hash_col(F.col("token"), a, b)
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1, F.col("cnt")).otherwise(
-                -F.col("cnt")
+    hashed = with_hashes(counted, "token", [(a, b)])
+    sums = hashed.groupBy(id_col).agg(
+        *[
+            F.expr(
+                f"sum(CASE WHEN (shiftright(__m0, {bit}) & 1) = 1 THEN cnt ELSE -cnt END)"
+                f" AS s{bit}"
             )
-        ).alias(f"s{bit}")
-        for bit in range(SIMHASH_BITS)
-    ]
-    sums = counted.groupBy(id_col).agg(*bit_sums)
-    fp = F.lit(0).cast("long")
-    for bit in range(SIMHASH_BITS):
-        fp = fp + F.when(F.col(f"s{bit}") > 0, F.lit(1 << bit)).otherwise(F.lit(0))
-    return sums.select(F.col(id_col), fp.alias("simhash"))
+            for bit in range(SIMHASH_BITS)
+        ]
+    )
+    fp = " + ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [f"CASE WHEN s{bit} > 0 THEN {1 << bit} ELSE 0 END" for bit in range(SIMHASH_BITS)]
+    )
+    return sums.selectExpr(sql_ident(id_col), f"{fp} AS simhash")

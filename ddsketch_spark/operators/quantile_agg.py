@@ -112,6 +112,24 @@ def build_partials(
     return src.mapInPandas(build, schema=out_schema)
 
 
+def _merge_by_group(parts: DataFrame, ops: _Ops, group_cols: Sequence[str], fields: str, finish):
+    """One grouped pandas pass over partial state rows: each group's
+    partials are merged and ``finish(merged)`` makes its output frame.
+    No group columns means one global group."""
+    group_cols = list(group_cols)
+    if not group_cols:
+        parts = parts.withColumn(_GLOBAL, F.lit(1))
+    out_schema = _group_schema_prefix(parts, group_cols) + fields
+
+    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = finish(ops.merge_many([ops.from_row(r) for _, r in pdf.iterrows()]))
+        for g in group_cols:
+            out[g] = pdf[g].iloc[0]
+        return out
+
+    return parts.groupBy(*(group_cols or [_GLOBAL])).applyInPandas(merge_fn, schema=out_schema)
+
+
 def sketch_agg(
     df: DataFrame,
     value: str,
@@ -119,24 +137,14 @@ def sketch_agg(
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """values -> per-group merged sketch state rows."""
-    group_cols = list(group_cols)
     parts = build_partials(df, value, ops, group_cols)
-    drop_global = False
-    if not group_cols:
-        parts = parts.withColumn(_GLOBAL, F.lit(1))
-        group_cols = [_GLOBAL]
-        drop_global = True
-    out_schema = _group_schema_prefix(parts, group_cols) + ops.state_fields
+    return _merge_by_group(
+        parts, ops, group_cols, ops.state_fields, lambda sk: pd.DataFrame([ops.to_row(sk)])
+    )
 
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = ops.merge_many([ops.from_row(r) for _, r in pdf.iterrows()])
-        row = ops.to_row(merged)
-        for g in group_cols:
-            row[g] = pdf[g].iloc[0]
-        return pd.DataFrame([row])
 
-    out = parts.groupBy(*group_cols).applyInPandas(merge_fn, schema=out_schema)
-    return out.drop(_GLOBAL) if drop_global else out
+def _quantile_rows(ops: _Ops, sk, qs: list[float]) -> pd.DataFrame:
+    return pd.DataFrame({"q": qs, "estimate": ops.core.quantiles(sk, qs), "n": sk.n})
 
 
 def quantiles_from_states(
@@ -145,6 +153,7 @@ def quantiles_from_states(
     qs: Sequence[float],
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
+    """Quantile rows of stored (already merged) state rows."""
     qs = [float(q) for q in qs]
     out_schema = (
         _group_schema_prefix(states, group_cols) + "q double, estimate double, n long"
@@ -154,9 +163,7 @@ def quantiles_from_states(
         for pdf in it:
             outs = []
             for _, r in pdf.iterrows():
-                sk = ops.from_row(r)
-                ests = self_core_quantiles(ops, sk, qs)
-                out = pd.DataFrame({"q": qs, "estimate": ests, "n": sk.n})
+                out = _quantile_rows(ops, ops.from_row(r), qs)
                 for g in group_cols:
                     out[g] = r[g]
                 outs.append(out)
@@ -166,10 +173,6 @@ def quantiles_from_states(
     return states.mapInPandas(evaluate, schema=out_schema)
 
 
-def self_core_quantiles(ops: _Ops, sk, qs):
-    return ops.core.quantiles(sk, qs)
-
-
 def quantiles(
     df: DataFrame,
     value: str,
@@ -177,5 +180,13 @@ def quantiles(
     qs: Sequence[float],
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
-    states = sketch_agg(df, value, ops, group_cols)
-    return quantiles_from_states(states, ops, qs, group_cols)
+    """(group_cols..., q, estimate, n): the same rows as
+    ``quantiles_from_states(sketch_agg(...))``, but each group's partials
+    are merged and evaluated in one pandas pass (two Python stages, not
+    three)."""
+    qs = [float(q) for q in qs]
+    parts = build_partials(df, value, ops, group_cols)
+    return _merge_by_group(
+        parts, ops, group_cols, "q double, estimate double, n long",
+        lambda sk: _quantile_rows(ops, sk, qs),
+    )

@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 from ddsketch_spark.functions.hashing import (
     MERSENNE61,
     hash_params,
-    mixed_hash_col,
     mixed_hash_sql,
+    with_hashes,
 )
 
 SAMPLE_SEED = 101
@@ -42,9 +42,13 @@ def _threshold(fraction: float) -> int:
     return int(round(fraction * MERSENNE61))
 
 
-def _unit_hash(key: Column, seed: int) -> Column:
-    a, b = hash_params(1, seed)[0]
-    return mixed_hash_col(key, a, b)
+_HASH_COLS = ("__x", "__h0", "__m0")
+
+
+def _unit_hash(df: DataFrame, key_col: str, seed: int) -> DataFrame:
+    """``df`` plus the key's mixed hash ``__m0`` (staged projections;
+    drop ``_HASH_COLS`` when done)."""
+    return with_hashes(df, key_col, hash_params(1, seed))
 
 
 def unit_hash_sql(key: str, seed: int = SAMPLE_SEED) -> str:
@@ -58,8 +62,10 @@ def hash_sample(
 ) -> DataFrame:
     """Deterministic Bernoulli sample: keep rows whose key hashes below
     ``fraction`` of the hash range.  Partition-layout independent."""
-    return df.where(
-        _unit_hash(F.col(key_col), seed) < F.lit(_threshold(fraction))
+    return (
+        _unit_hash(df, key_col, seed)
+        .where(f"__m0 < {_threshold(fraction)}")
+        .drop(*_HASH_COLS)
     )
 
 
@@ -83,7 +89,9 @@ def stratified_sample(
             F.when(F.col(group_col) == F.lit(group), F.lit(_threshold(fraction)))
             .otherwise(thresh)
         )
-    return df.where(_unit_hash(F.col(key_col), seed) < thresh)
+    return (
+        _unit_hash(df, key_col, seed).where(F.col("__m0") < thresh).drop(*_HASH_COLS)
+    )
 
 
 def split_assign(
@@ -102,7 +110,7 @@ def split_assign(
     if any(w < 0 for w in weights) or sum(weights) <= 0:
         raise ValueError("weights must be nonnegative with positive sum")
     total = float(sum(weights))
-    h = _unit_hash(F.col(key_col), seed)
+    h = F.col("__m0")
     expr: Column = F.lit(names[-1])
     cum = 0.0
     cuts = []
@@ -111,7 +119,7 @@ def split_assign(
         cuts.append(_threshold(cum))
     for name, cut in zip(reversed(names[:-1]), reversed(cuts)):
         expr = F.when(h < F.lit(cut), F.lit(name)).otherwise(expr)
-    return df.withColumn(split_col, expr)
+    return _unit_hash(df, key_col, seed).withColumn(split_col, expr).drop(*_HASH_COLS)
 
 
 def split_cuts(

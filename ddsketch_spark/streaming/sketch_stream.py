@@ -74,15 +74,9 @@ def stream_hll_registers(
     ordinary streaming ``groupBy(idx).max(rho)`` over the codegen'd
     register columns -- state bounded by #groups x 2^p rows, monotone
     updates (max), so 'update' output mode emits only improved registers."""
-    from ddsketch_spark.core.hll import HLLConfig
-    from ddsketch_spark.operators.approx_agg import hll_idx_rho
+    from ddsketch_spark.operators.approx_agg import hll_registers
 
-    cfg = cfg or HLLConfig()
-    idx, rho = hll_idx_rho(F.col(value), cfg)
-    keyed = stream_df.select(*group_cols, idx.alias("idx"), rho.alias("rho"))
-    return keyed.where(F.col("idx").isNotNull()).groupBy(*group_cols, "idx").agg(
-        F.max("rho").alias("rho")
-    )
+    return hll_registers(stream_df, value, cfg, group_cols)
 
 
 _STATE_SCHEMA = (

@@ -102,6 +102,76 @@ def test_hll_spark_state_grouped(spark, sf_correct):
         assert list(states[et]["rhos"]) == sk.rhos.tolist()
 
 
+def _core_finish(cfg: HLLConfig, vals) -> tuple[float, int, int]:
+    sk = hll_core.add(hll_core.empty(cfg), np.asarray(vals, np.int64))
+    return hll_core.estimate(sk), cfg.m - len(sk.idxs), hll_core.register_checksum(sk)
+
+
+@pytest.mark.parametrize("p", [4, 12])
+def test_hll_catalyst_finish_equals_core(spark, sf_correct, p):
+    """The Catalyst finish (v_zero, checksum, harmonic sum, estimate) equals
+    core.hll: v_zero and checksum exactly, estimate bit for bit -- grouped,
+    global, and over empty input (one global row: v_zero = m, estimate 0)."""
+    cfg = HLLConfig(p=p)
+    ev = spark.read.parquet(f"{sf_correct}/events.parquet")
+    pdf = ev.select("event_type", "user_id").toPandas()
+
+    grouped = ops.hll_estimate(ev, "user_id", cfg, group_cols=("event_type",)).collect()
+    assert {r["event_type"] for r in grouped} == set(pdf["event_type"])
+    for r in grouped:
+        vals = pdf.loc[pdf["event_type"] == r["event_type"], "user_id"]
+        assert (r["estimate"], r["v_zero"], r["checksum"]) == _core_finish(cfg, vals)
+
+    (glob,) = ops.hll_estimate(ev, "user_id", cfg).collect()
+    assert (glob["estimate"], glob["v_zero"], glob["checksum"]) == _core_finish(
+        cfg, pdf["user_id"]
+    )
+
+    empty = ev.where(F.lit(False))
+    (row,) = ops.hll_estimate(empty, "user_id", cfg).collect()
+    assert (row["estimate"], row["v_zero"], row["checksum"]) == _core_finish(cfg, [])
+    assert ops.hll_estimate(empty, "user_id", cfg, group_cols=("event_type",)).count() == 0
+    (state,) = ops.hll_sketch(empty, "user_id", cfg).collect()
+    assert state.asDict() == hll_core.to_dict(hll_core.empty(cfg))
+
+
+def test_hll_output_schema_nullable(spark):
+    """The Catalyst finish keeps the schema the pandas finalizers had (every
+    column nullable), so stored results keep their exact bytes."""
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "x long, g string")
+    est = ops.hll_estimate(df, "x", group_cols=("g",))
+    assert est.schema.simpleString() == (
+        "struct<g:string,estimate:double,v_zero:bigint,checksum:bigint>"
+    )
+    assert all(f.nullable for f in est.schema.fields)
+    sk = ops.hll_sketch(df, "x", group_cols=("g",))
+    assert sk.schema.simpleString() == (
+        "struct<g:string,p:int,seed:bigint,idxs:array<bigint>,rhos:array<bigint>>"
+    )
+    assert all(f.nullable for f in sk.schema.fields)
+
+
+def test_hll_rollup_group_named_all_label_keeps_own_row(spark):
+    """A real group whose value equals all_label is not merged into the
+    global row: both rows come back under the label, each with its own
+    registers."""
+    cfg = HLLConfig(p=8)
+    rows = [(int(v), "__ALL__") for v in range(0, 300)]
+    rows += [(int(v), "b") for v in range(1000, 1700)]
+    df = spark.createDataFrame(rows, "x long, g string")
+    out = ops.hll_estimate_rollup(df, "x", "g", cfg).collect()
+    got = sorted((r["g"], r["estimate"], r["v_zero"], r["checksum"]) for r in out)
+    xs = np.array([v for v, _ in rows])
+    want = sorted(
+        [
+            ("__ALL__", *_core_finish(cfg, xs[:300])),
+            ("b", *_core_finish(cfg, xs[300:])),
+            ("__ALL__", *_core_finish(cfg, xs)),
+        ]
+    )
+    assert got == want
+
+
 # ---------------------------------------------------------------------------
 # count-min core
 # ---------------------------------------------------------------------------

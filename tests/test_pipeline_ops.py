@@ -233,6 +233,26 @@ def test_cosine_topk_fast_probe_cap_raises(spark, sf_correct):
         sim.cosine_topk_fast(emb, probes, 5, max_probes=10)
 
 
+def test_cosine_topk_fast_ragged_rows_raise(spark):
+    """Ragged embeddings whose lengths sum to n*dim (here dim-1 and dim+1)
+    must raise, not be reshaped into silently misaligned rows."""
+    import pyarrow as pa
+
+    dim = 4
+    ragged = pa.array([[1.0] * (dim - 1), [1.0] * (dim + 1)], pa.list_(pa.float64()))
+    with pytest.raises(ValueError, match="row lengths 3..5"):
+        sim.decode_embeddings(ragged, dim)
+    ok = pa.array([[1.0, 2.0, 3.0, 4.0], [5.0, 6.0, 7.0, 8.0]], pa.list_(pa.float64()))
+    assert sim.decode_embeddings(ok, dim).tolist() == [[1, 2, 3, 4], [5, 6, 7, 8]]
+
+    emb = spark.createDataFrame(
+        [(1, [1.0] * (dim - 1)), (2, [1.0] * (dim + 1))], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    probes = spark.createDataFrame([(0, [1.0] * dim)], "probe_id long, embedding array<double>")
+    with pytest.raises(Exception, match="ValueError: cosine_topk_fast requires"):
+        sim.cosine_topk_fast(emb, probes, 1).collect()
+
+
 def test_ivf_centroids_deterministic(spark, sf_correct):
     emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet")
     import numpy as np

@@ -52,6 +52,25 @@ def test_hll_registers_partial_agg(spark, sf_correct):
     assert "Exchange" in explained
 
 
+def test_hll_estimate_stays_in_catalyst(spark, sf_correct):
+    """The HLL finish (v_zero, checksum, estimate) runs in Catalyst: no
+    Python exec node anywhere in the plan, and the register maxima still
+    combine map-side."""
+    ev = spark.read.parquet(f"{sf_correct}/events.parquet")
+    for out in (
+        aops.hll_estimate(ev, "user_id", group_cols=("event_type",)),
+        aops.hll_estimate(ev, "user_id"),
+        aops.hll_estimate_rollup(ev, "user_id", "event_type"),
+        aops.hll_sketch(ev, "user_id", group_cols=("event_type",)),
+    ):
+        explained = out._sc._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "formatted"
+        )
+        assert "partial_max" in explained
+        for node in ("InPandas", "InArrow", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in explained, explained
+
+
 def test_bloom_membership_joins_broadcast(spark, sf_correct):
     li = spark.read.parquet(f"{sf_correct}/lineitem.parquet")
     probes = spark.range(0, 100).select(F.col("id").alias("probe"))

@@ -218,3 +218,21 @@ def test_compacting_rank_bound_partition_layout_independent(spark, sf_correct):
                 assert abs(rank - r["q"] * len(vals)) <= eps * len(vals), (
                     kind, parts, r["event_type"], r["q"],
                 )
+
+
+@pytest.mark.parametrize("kind", ["kll", "tdigest"])
+def test_quantiles_fold_equals_states_path(spark, sf_correct, kind):
+    """quantiles() merges and evaluates in one pandas pass; its rows equal
+    evaluating the stored merged states, grouped and global."""
+    ev = spark.read.parquet(f"{sf_correct}/events.parquet").repartition(5)
+    ops = qa.kll_ops(KLLConfig(k=200)) if kind == "kll" else qa.tdigest_ops()
+    for groups in [("event_type",), ()]:
+        folded = qa.quantiles(ev, "value", ops, Q_GRID, group_cols=groups).collect()
+        staged = qa.quantiles_from_states(
+            qa.sketch_agg(ev, "value", ops, group_cols=groups), ops, Q_GRID, groups
+        ).collect()
+        assert folded[0].__fields__ == staged[0].__fields__
+        assert sorted(map(tuple, folded)) == sorted(map(tuple, staged))
+        assert len(folded) == len(Q_GRID) * (
+            ev.select(*groups).distinct().count() if groups else 1
+        )
